@@ -106,6 +106,43 @@ _ENGINE_CACHE: dict[tuple, "SortifyEngine"] = {}
 _DELETE_BATCH_CAP = 1000
 
 
+def _free(df: DataFrame) -> None:
+    """Free ``df``'s executor storage now: unpersist a cached frame and
+    drop the blocks of a ``localCheckpoint`` frame, which otherwise
+    wait for a JVM garbage collection to reach Spark's context cleaner.
+    Only for frames nothing reads again — a frame derived from a freed
+    checkpoint cannot recompute it."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def _doc_id_list(doc_ids: DataFrame | list, cap: int | None = None) -> list:
+    """Sorted distinct string document ids from a frame (its
+    ``document_id`` column) or a list.  With ``cap``, a longer list
+    fails loudly — and a frame transfers at most ``cap + 1`` ids to the
+    driver, so a huge frame is refused without being collected."""
+    if isinstance(doc_ids, DataFrame):
+        q = doc_ids.select(F.col("document_id").cast("string")).distinct()
+        if cap is not None:
+            q = q.limit(cap + 1)
+        vals = sorted(r[0] for r in q.collect())
+    else:
+        vals = sorted({str(d) for d in doc_ids})
+    if cap is not None and len(vals) > cap:
+        raise ValueError(
+            f"delete_vectors: deletion batch exceeds {cap} ids — "
+            "each batch embeds a driver-local relation in four "
+            "artifact plans, so it must stay metadata-sized; use "
+            "delete_vectors_batched for larger deletion sets "
+            "(the reference's batch-delete accepts unbounded id "
+            "lists, apis/v1/documents.py:619 — the batched helper "
+            "is the parity surface)"
+        )
+    return vals
+
+
 def get_engine(
     spark: SparkSession,
     sf_dir: str,
@@ -181,17 +218,8 @@ class SortifyEngine:
                 F.col("doc_id") < doc_limit
             )
         self.events = load_table(spark, sf_dir, "events")
-        # Vector index: built once per engine, cached — the batch
-        # ingest/vectorize pipeline output (chunk 128/32 keeps multi-chunk
-        # behavior on the short synthetic docs).
-        build = ingest_vectorize_expr if embed == "expr" else ingest_vectorize
-        self.vectors = build(
-            self.documents,
-            owner_col=owner_col,
-            chunk_size=128,
-            overlap=32,
-            dim=dim,
-        ).persist()
+        # Vector index: built once per engine, cached
+        self.vectors = self._vectorize(self.documents).persist()
         #: Result cache for repeated searches (reference caches AI search
         #: responses keyed by question hash, ``ai_cache_manager.py:244-257``).
         self.result_cache = QueryResultCache()
@@ -233,6 +261,21 @@ class SortifyEngine:
         #: mutation churn — ADVICE r12); plain driver-side data —
         #: nothing to unpersist.
         self._occ_cache: dict[tuple, tuple] = {}
+        #: Served frames the last write superseded, freed by the next
+        #: one (see :meth:`_write`).
+        self._retired: list[DataFrame] = []
+
+    def _vectorize(self, docs: DataFrame) -> DataFrame:
+        """documents → vectors-table rows: the engine's batch
+        ingest/vectorize pipeline (chunk 128/32 keeps multi-chunk
+        behavior on the short synthetic docs)."""
+        build = (
+            ingest_vectorize_expr if self.embed == "expr" else ingest_vectorize
+        )
+        return build(
+            docs, owner_col=self.owner_col, chunk_size=128, overlap=32,
+            dim=self.dim,
+        )
 
     # -- documents ---------------------------------------------------------
 
@@ -441,15 +484,19 @@ class SortifyEngine:
         return self._lsh_cache[key]
 
     def release(self) -> None:
-        """Serving shutdown hook: unpersist EVERY cached frame this
-        engine holds — the vectors table, the LSH index cache, and the
-        persisted result-cache entries.  After release (plus GC of any
+        """Serving shutdown hook: free EVERY stored frame this engine
+        holds — the served vectors/documents frames (and those the last
+        write retired), the LSH index cache, and the persisted
+        result-cache entries.  After release (plus GC of any other
         localCheckpoint references) executor storage returns to its
         pre-engine state; the mutation battery asserts this
         (``test_facade_mutation_storage_clean``), so a long-lived
-        serving process cycling engines cannot accrete storage blocks."""
+        serving process cycling engines cannot accrete storage blocks.
+        The engine serves no further searches after release."""
         self._drop_lsh_cache()
-        self.vectors.unpersist()
+        for df in (self.vectors, self.documents, *self._retired):
+            _free(df)
+        self._retired = []
         self.result_cache.clear()
 
     def _drop_lsh_cache(self) -> None:
@@ -604,92 +651,131 @@ class SortifyEngine:
         self, docs: DataFrame, rebuild_over: float = 0.5
     ) -> dict:
         """The reference's upload path end-to-end (S1 + S9 +
-        ``vector_db_service.py:73-76``): vectorize NEW documents with
-        the engine's pipeline, append them to the served vectors table,
-        and keep any BUILT persisted IVF artifacts current — via
-        incremental :func:`search.index.upsert_ivf_index` (FAISS-add
-        against the stored quantizer, only touched bucket partitions
-        rewrite) while the index has grown less than ``rebuild_over``
-        relative to its quantizer's training size (the assign
-        manifest's ``built_rows``), and via a full
+        ``vector_db_service.py:73-76``): vectorize the documents with
+        the engine's pipeline, then :meth:`_write` them — a re-sent
+        ``doc_id`` REPLACES its previous document and vectors in the
+        served frames and in every built artifact.  Built IVF
+        artifacts stay current incrementally (FAISS-add against the
+        stored quantizer) while the index has grown less than
+        ``rebuild_over`` relative to its quantizer's training size (the
+        assign manifest's ``built_rows``), and via a full
         :meth:`rebuild_ivf_index` re-train past that drift budget.
-        Returns ``{vtype: ("upsert"|"rebuild", version)}`` for the
+        Returns ``{artifact: ("upsert"|"rebuild", version)}`` for the
         indexes maintained."""
-        from sortify_spark.search.index import upsert_ivf_index
-        from sortify_spark.sources.versioned import read_manifest
+        new_vecs = self._vectorize(docs).persist()
+        # one summary vector per document: the batch's id list
+        ids = new_vecs.filter(F.col("vtype") == "summary")
+        try:
+            return self._write(
+                ids.select("document_id"), docs, new_vecs, rebuild_over
+            )
+        finally:
+            new_vecs.unpersist()  # the served frame holds its own copy
 
-        build = (
-            ingest_vectorize_expr
-            if self.embed == "expr"
-            else ingest_vectorize
+    def _write(
+        self,
+        ids: DataFrame,
+        docs: DataFrame | None = None,
+        new_vecs: DataFrame | None = None,
+        rebuild_over: float = 0.5,
+    ) -> dict:
+        """The ONE write path behind :meth:`add_documents` and
+        :meth:`delete_vectors`: every served row and every built
+        artifact row of the documents in ``ids`` (a ``document_id``
+        string frame) is replaced by ``docs`` / ``new_vecs`` — a delete
+        is the same write with no new rows.
+
+        Every BUILT artifact runs one delta (one commit per table): the
+        BM25 lexical index (:func:`search.lexical._lexical_delta`) and
+        each IVF index (:func:`search.index._ivf_delta`; past the
+        ``rebuild_over`` drift budget, a full re-train after the swap).
+        The served frames swap to survivors ∪ new rows, each
+        materialized (``localCheckpoint``) so the new frame's plan does
+        not embed the old one: a persisted frame built on the previous
+        persisted frame roughly doubles its plan per write and ends in
+        a driver OOM inside plan-string rendering.  Adoption dirty flags
+        are set for artifacts not yet built, and the LSH index and the
+        result cache — both derived from the old corpus — are
+        dropped."""
+        from sortify_spark.search.index import _ivf_delta
+        from sortify_spark.search.lexical import _lexical_delta
+        from sortify_spark.sources.versioned import (
+            read_manifest,
+            read_versioned,
         )
-        new_vecs = build(
-            docs,
-            owner_col=self.owner_col,
-            chunk_size=128,
-            overlap=32,
-            dim=self.dim,
-        ).persist()
-        self.documents = self.documents.unionByName(docs)
-        # swap-then-release (ADVICE r9): materialize the grown frame
-        # BEFORE unpersisting the old one it builds on, so repeated
-        # mutations don't accumulate cached lineages in executor storage
-        old_vectors = self.vectors
-        self.vectors = self.vectors.unionByName(new_vecs).persist()
-        self.vectors.count()
-        old_vectors.unpersist()
-        # LSH caches key against a center derived from the OLD corpus;
-        # release + drop them so the next probe rebuilds over the
-        # grown corpus without leaking the old cached blocks
-        self._drop_lsh_cache()
+
+        doc_ids = ids.select(
+            F.col("document_id").cast("long").alias("doc_id")
+        )
+        vectors = self.vectors.join(
+            F.broadcast(ids), "document_id", "left_anti"
+        )
+        documents = self.documents.join(
+            F.broadcast(doc_ids), "doc_id", "left_anti"
+        )
+        if docs is not None:
+            vectors = vectors.unionByName(new_vecs)
+            documents = documents.unionByName(docs)
+        vectors = vectors.localCheckpoint(eager=True)
+        documents = documents.localCheckpoint(eager=True)
         out: dict = {}
+        if self._lex_built:
+            # add, replace and delete are all exact (search/lexical
+            # contract), so the lexical artifact never needs a rebuild
+            out["lexical"] = (
+                "upsert",
+                _lexical_delta(
+                    self.lexical_index_path(),
+                    docs=None if docs is None else self._lex_docs(docs),
+                    deleted=doc_ids,
+                ),
+            )
+        retrain = []
+        for vtype in sorted(self._ivf_built):
+            path = self.ivf_index_path(vtype)
+            is_vtype = F.col("vtype") == vtype
+            adds = None if new_vecs is None else new_vecs.filter(is_vtype)
+            n_add = 0 if adds is None else adds.count()
+            if n_add:
+                built = int(
+                    read_manifest(f"{path}/assign").get("built_rows") or 0
+                )
+                n_index = read_versioned(
+                    self.spark, f"{path}/assign", "bucket"
+                ).count()
+                # cumulative drift vs the quantizer's training size —
+                # repeated small adds eventually trip the re-train
+                if n_index + n_add > (1.0 + rebuild_over) * built:
+                    retrain.append(vtype)
+                    continue
+            gone = self.vectors.filter(is_vtype).join(
+                F.broadcast(ids), "document_id", "left_semi"
+            )
+            out[vtype] = (
+                "upsert",
+                _ivf_delta(
+                    path, adds if n_add else None, gone, id_col="vector_id"
+                ),
+            )
+        # swap-then-release (ADVICE r9), AFTER the deltas: a failed
+        # delta leaves the served frames on the old corpus, so a retry
+        # re-locates every touched id.  Superseded frames are freed one
+        # write later — a checkpoint cannot recompute, so a query still
+        # running on the old frames when this write returns keeps its
+        # blocks — which keeps executor storage at two versions.
+        for df in self._retired:
+            _free(df)
+        self._retired = [self.vectors, self.documents]
+        self.vectors, self.documents = vectors, documents
+        self._drop_lsh_cache()
+        self.result_cache.clear()
         if not self._lex_built:
             self._lex_dirty = True  # adoption must not trust n_docs alone
         # same discipline for unbuilt IVF artifacts (ADVICE r9): a later
         # adoption must rebuild rather than trust the stale snapshot
         self._ivf_dirty.update({"summary", "chunk"} - self._ivf_built)
-        if self._lex_built:
-            from sortify_spark.search.lexical import upsert_lexical_index
-
-            # incremental posting/df/stats maintenance — add AND
-            # replace are exact (search/lexical contract), so the
-            # lexical artifact never needs a drift-budget rebuild
-            out["lexical"] = (
-                "upsert",
-                upsert_lexical_index(
-                    self._lex_docs(docs),
-                    self.lexical_index_path(),
-                ),
-            )
-        for vtype in sorted(self._ivf_built):
-            path = self.ivf_index_path(vtype)
-            m = read_manifest(f"{path}/assign")
-            adds = new_vecs.filter(F.col("vtype") == vtype).select(
-                F.col("vector_id").alias("vec_id"), "embedding", "owner_id"
-            )
-            n_add = adds.count()
-            if n_add == 0:
-                continue
-            built = int(m.get("built_rows") or 0)
-            from sortify_spark.sources.versioned import read_versioned
-
-            n_index = read_versioned(
-                self.spark, f"{path}/assign", "bucket"
-            ).count()
-            # cumulative drift vs the quantizer's training size —
-            # repeated small adds eventually trip the re-train
-            grown = (
-                ((n_index + n_add) / built - 1.0)
-                if built
-                else float("inf")
-            )
-            if grown > rebuild_over:
-                out[vtype] = ("rebuild", self.rebuild_ivf_index(vtype))
-            else:
-                out[vtype] = ("upsert", upsert_ivf_index(adds, path))
-        # the batch frame's cache served its consumers (the grown
-        # vectors table is independently materialized above)
-        new_vecs.unpersist()
+        for vtype in retrain:  # a re-train reads the swapped frame
+            out[vtype] = ("rebuild", self.rebuild_ivf_index(vtype))
         return out
 
     def _ivf_index(self, vtype: str) -> str:
@@ -1299,24 +1385,17 @@ class SortifyEngine:
                     .drop("__r")
                 )
 
-            import os as _os
-
             return fusion.two_stage_hybrid_many(
                 summary,
                 chunk_scored_fn,
                 stage1_k=STAGE1_K,
                 top_k=STAGE2_K,
-                # Same rationale as the single-query path's knob (the
-                # stage-1 scorer is the interpreted cosine fold over the
-                # persisted vectors table, consumed by two legs) — r14
+                # same rationale as the single-query path: the stage-1
+                # scorer is the interpreted cosine fold over the
+                # persisted vectors table, consumed by two legs — r14
                 # same-session A/B on e2e_search_batched measured the
-                # checkpoint a win here too, so the batched path defaults
-                # ON; the env knob preserves the measured-per-deployment
-                # contract.
-                materialize_stage1=_os.environ.get(
-                    "SORTIFY_FACADE_MANY_MAT_S1", "1"
-                )
-                == "1",
+                # checkpoint a win here too
+                materialize_stage1=True,
             ).select("query_id", "id", "score", "tier", "rnk")
         raise ValueError(
             f"semantic_search_many does not support {search_type!r}"
@@ -1367,14 +1446,15 @@ class SortifyEngine:
         tables swap to the survivors (with Delta this is a real
         ``DELETE``), and — the reference's contract that a deleted
         document is UNFINDABLE, VERDICT r8 next #1 — every BUILT
-        persisted artifact is maintained in place: the BM25 lexical
-        index via :func:`search.lexical.delete_from_lexical_index`
-        (postings/doclen removed, df/n_docs/sum_dl decremented by exact
-        deltas) and each IVF index via
-        :func:`search.index.delete_from_ivf_index` (keyed bucket
-        delete), so ``keyword``/``hybrid_lexical``/``ivf`` searches
-        stop returning the doc WITHOUT a rebuild.  Returns the
-        surviving vectors frame (also the new ``self.vectors``).
+        persisted artifact is maintained in place by the shared
+        :meth:`_write` (a delete is that write with no new rows): the
+        BM25 lexical index loses the docs' postings/doclen rows with
+        df/n_docs/sum_dl decremented by exact deltas, and each IVF
+        index loses their vectors' bucket rows, so
+        ``keyword``/``hybrid_lexical``/``ivf`` searches — and
+        :meth:`cached_search` — stop returning the doc WITHOUT a
+        rebuild.  Returns the surviving vectors frame (also the new
+        ``self.vectors``).
 
         One call accepts at most ``_DELETE_BATCH_CAP`` ids.  This is
         the ENGINE's bound, not the reference's: the reference's
@@ -1386,82 +1466,17 @@ class SortifyEngine:
         deletion set use :meth:`delete_vectors_batched`, which loops
         bounded batches internally and matches the reference's
         unbounded-list contract."""
-        # Collect the deletion list ONCE into a driver-local relation.
-        # A localCheckpoint here leaked one storage block per delete
-        # (r11 finding): the checkpointed RDD enters the lineage of
-        # the retained ``self.vectors``/``self.documents`` frames, so
-        # the ContextCleaner can never reclaim it for the life of the
-        # engine; a LocalRelation has no cached blocks and broadcasts
-        # identically into the per-artifact anti-joins.
-        cap = _DELETE_BATCH_CAP
-        if isinstance(doc_ids, DataFrame):
-            # limit(cap+1) bounds the driver transfer even when the
-            # caller hands over a huge frame; the cap itself is checked
-            # below so a too-large batch fails loudly instead of
-            # embedding a multi-million-row LocalRelation in four plans.
-            vals = sorted(
-                r["document_id"]
-                for r in doc_ids.select(
-                    F.col("document_id").cast("string")
-                )
-                .distinct()
-                .limit(cap + 1)
-                .collect()
+        # The deletion list becomes ONE driver-local relation: a
+        # localCheckpoint here leaked one storage block per delete (r11
+        # finding) through the retained served frames' lineage; a
+        # LocalRelation has no cached blocks and broadcasts identically
+        # into the per-artifact anti-joins.
+        vals = _doc_id_list(doc_ids, cap=_DELETE_BATCH_CAP)
+        self._write(
+            self.spark.createDataFrame(
+                [(v,) for v in vals], "document_id string"
             )
-        else:
-            vals = sorted({str(d) for d in doc_ids})
-        if len(vals) > cap:
-            raise ValueError(
-                f"delete_vectors: deletion batch exceeds {cap} ids — "
-                "each batch embeds a driver-local relation in four "
-                "artifact plans, so it must stay metadata-sized; use "
-                "delete_vectors_batched for larger deletion sets "
-                "(the reference's batch-delete accepts unbounded id "
-                "lists, apis/v1/documents.py:619 — the batched helper "
-                "is the parity surface)"
-            )
-        ids = self.spark.createDataFrame(
-            [(v,) for v in vals], "document_id string"
         )
-        if not self._lex_built:
-            self._lex_dirty = True  # adoption must not trust n_docs alone
-        self._ivf_dirty.update({"summary", "chunk"} - self._ivf_built)
-        if self._lex_built:
-            from sortify_spark.search.lexical import (
-                delete_from_lexical_index,
-            )
-
-            delete_from_lexical_index(
-                ids.select(F.col("document_id").cast("long").alias("doc_id")),
-                self.lexical_index_path(),
-            )
-        for vtype in sorted(self._ivf_built):
-            from sortify_spark.search.index import delete_from_ivf_index
-
-            gone = (
-                self.vectors.filter(F.col("vtype") == vtype)
-                .join(F.broadcast(ids), "document_id", "left_semi")
-                .select(F.col("vector_id").alias("vec_id"))
-            )
-            delete_from_ivf_index(gone, self.ivf_index_path(vtype))
-        # swap-then-release (ADVICE r9): materialize survivors before
-        # unpersisting the frame they filter from
-        old_vectors = self.vectors
-        self.vectors = self.vectors.join(
-            F.broadcast(ids), "document_id", "left_anti"
-        ).persist()
-        self.vectors.count()
-        old_vectors.unpersist()
-        self.documents = self.documents.join(
-            F.broadcast(
-                ids.select(F.col("document_id").cast("long").alias("doc_id"))
-            ),
-            "doc_id",
-            "left_anti",
-        )
-        # LSH centers derive from the pre-delete corpus — release the
-        # persisted frames, not just the references
-        self._drop_lsh_cache()
         return self.vectors
 
     def delete_vectors_batched(
@@ -1506,17 +1521,7 @@ class SortifyEngine:
             raise ValueError(
                 f"batch_size must be in [1, {_DELETE_BATCH_CAP}]"
             )
-        if isinstance(doc_ids, DataFrame):
-            vals = sorted(
-                r["document_id"]
-                for r in doc_ids.select(
-                    F.col("document_id").cast("string")
-                )
-                .distinct()
-                .collect()
-            )
-        else:
-            vals = sorted({str(d) for d in doc_ids})
+        vals = _doc_id_list(doc_ids)
         for done, i in enumerate(range(0, len(vals), cap)):
             try:
                 self.delete_vectors(vals[i : i + cap])

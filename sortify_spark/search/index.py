@@ -25,6 +25,7 @@ which is exactly how it is written here.
 from __future__ import annotations
 
 import threading
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -190,98 +191,25 @@ def upsert_ivf_index(
     nearest EXISTING centroid (the quantizer does not move; re-train by
     :func:`build_ivf_index`) and committed keyed ``vec_id`` into the
     bucket-partitioned assign table, touching only the buckets the
-    batch lands in.  Returns the committed assign version.
+    batch lands in.  Returns the committed assign version —
+    :func:`_ivf_delta` with no deleted ids.
 
-    A REPLACED id whose new embedding lands in a DIFFERENT bucket is
-    first removed from its old bucket — located with one column-pruned
-    ``(vec_id, bucket)`` scan of the assign table — via a keyed delete,
-    then the new rows commit.  That is two versions, not one: the
-    in-between snapshot (and a crash between the commits) misses the
-    moving ids but can never DUPLICATE them, and the next upsert or
-    rebuild heals the gap — the derived-artifact trade the reference's
-    delete-then-readd vector refresh makes too
-    (``vector_db_service.py:73-76``).  The paired ``centroid_version``
-    is carried through every commit so probes keep resolving the
+    A REPLACED id whose new embedding lands in a DIFFERENT bucket
+    leaves its old bucket in the SAME commit that adds it to the new
+    one: every snapshot holds each id exactly once, and a crash leaves
+    the previous snapshot current.  The paired ``centroid_version`` is
+    carried through every commit so probes keep resolving the
     quantizer that assigned the rows.
 
     Scale: assignment is the same broadcast/BLAS kernel as the build
-    (batch × nlist); the moved-id scan reads two columns of the index
+    (batch × nlist); the old-row scan reads two columns of the index
     (column-pruned, no shuffle); the commit rewrites only affected
     bucket partitions.  Growth stats: each build records ``built_rows``
     in the assign manifest, so callers can rebuild when
     rows-now / built_rows exceeds a drift budget."""
-    from sortify_spark.sources.versioned import (
-        delete_versioned,
-        read_manifest,
-        read_versioned,
-        upsert_versioned,
-    )
-
-    spark = vectors.sparkSession
-    manifest = read_manifest(f"{path}/assign")
-    if manifest["version"] == 0:
-        raise FileNotFoundError(
-            f"no IVF index at {path} — upsert_ivf_index maintains an "
-            "EXISTING index (FAISS `add`); run build_ivf_index first"
-        )
-    cents = read_versioned(
-        spark,
-        f"{path}/centroids",
-        "part",
-        version=manifest.get("centroid_version"),
-    ).select("bucket", "centroid")
-    carry = tuple(manifest.get("carry") or ())
-    missing = [c for c in carry if c not in vectors.columns]
-    if missing:
-        raise ValueError(
-            f"index at {path} carries assign metadata {list(carry)}; "
-            f"the upsert batch is missing columns {missing}"
-        )
-    base = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("embedding"),
-        *[F.col(c) for c in carry],
-    )
-    assign = (
-        knn.assign_nearest_centroid
-        if exact_assign
-        else knn.assign_nearest_centroid_np
-    )
-    assigned = (
-        assign(base.select("vec_id", "embedding"), cents)
-        .withColumnRenamed("label", "bucket")
-        .join(base, "vec_id")
-        .select("vec_id", "embedding", *carry, "bucket")
-    )
-    assigned = assigned.localCheckpoint(eager=True)
-    # ids already indexed under a DIFFERENT bucket: delete before the
-    # keyed upsert (the upsert's anti-join is (bucket, vec_id) — it
-    # cannot see the old bucket's row)
-    old = read_versioned(spark, f"{path}/assign", "bucket").select(
-        "vec_id", F.col("bucket").alias("old_bucket")
-    )
-    moved = (
-        assigned.select("vec_id", "bucket")
-        .join(old, "vec_id")
-        .filter(F.col("bucket") != F.col("old_bucket"))
-        .select("vec_id", F.col("old_bucket").alias("bucket"))
-    )
-    pair = {"centroid_version": manifest.get("centroid_version")}
-    if manifest.get("built_rows") is not None:
-        # the drift-budget denominator must survive incremental commits
-        # (review r9: dropping it made the next add_documents see
-        # built=0 -> grown=inf -> a spurious full re-train every other
-        # add); it still records the QUANTIZER's training size
-        pair["built_rows"] = manifest["built_rows"]
-    pair["carry"] = list(carry)
-    if not moved.isEmpty():
-        delete_versioned(
-            moved, f"{path}/assign", keys=["vec_id"],
-            partition_col="bucket", extra=pair,
-        )
-    return upsert_versioned(
-        assigned, f"{path}/assign", keys=["vec_id"],
-        partition_col="bucket", extra=pair,
+    return _ivf_delta(
+        path, vectors=vectors, id_col=id_col, vec_col=vec_col,
+        exact_assign=exact_assign,
     )
 
 
@@ -292,49 +220,97 @@ def delete_from_ivf_index(
 ) -> int:
     """Keyed DELETE against the stored index — FAISS ``remove_ids`` /
     the reference's delete-by-id (``vector_db_service.py:263-323``)
-    applied to the persisted artifact (VERDICT r8 next #1: the facade's
-    ``delete_vectors`` previously rewrote only the served table,
-    leaving deleted ids probe-able until a full rebuild).
+    applied to the persisted artifact: :func:`_ivf_delta` with no new
+    vectors.  ``ids`` is a one-column frame of vector ids; ids not in
+    the index are ignored (idempotent).  Returns the committed assign
+    version (the current version, with no commit, when nothing
+    matched)."""
+    return _ivf_delta(path, deleted=ids, id_col=id_col)
 
-    ``ids`` is a one-column frame of vector ids; ids not in the index
-    are ignored (idempotent).  Located with the same column-pruned
-    ``(vec_id, bucket)`` scan as the upsert's moved-id pass, removed
-    via one keyed delete that rewrites only the touched bucket
-    partitions.  The paired ``centroid_version`` and ``built_rows``
-    carry through so probes keep resolving the assigning quantizer and
-    drift-budget rebuild decisions keep their denominator.  Returns the
-    committed assign version (current version when nothing matched)."""
+
+def _ivf_delta(
+    path: str,
+    vectors: DataFrame | None = None,
+    deleted: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    exact_assign: bool = False,
+) -> int:
+    """The ONE incremental write body of the IVF artifact: every id in
+    ``vectors`` or ``deleted`` loses its indexed row, and ``vectors``
+    (assigned to the stored quantizer) brings the new rows — a delete
+    is an add with no new vectors.  The touched ids' current rows are
+    located with one column-pruned ``(vec_id, bucket)`` scan of the
+    assign table, and removal plus addition commit as ONE keyed merge,
+    so an id that moves bucket is never missing or duplicated in any
+    snapshot.  The paired ``centroid_version``, ``built_rows`` (the
+    drift-budget denominator) and ``carry`` schema carry through.
+    Returns the committed assign version, or the current one, with no
+    commit, when ``vectors`` is None and no id is indexed."""
     from sortify_spark.sources.versioned import (
-        delete_versioned,
+        merge_versioned,
         read_manifest,
         read_versioned,
     )
 
-    spark = ids.sparkSession
+    spark = (vectors if vectors is not None else deleted).sparkSession
     manifest = read_manifest(f"{path}/assign")
     if manifest["version"] == 0:
         raise FileNotFoundError(
-            f"no IVF index at {path} — delete_from_ivf_index maintains "
-            "an EXISTING index; run build_ivf_index first"
+            f"no IVF index at {path} — incremental writes maintain an "
+            "EXISTING index (FAISS `add`); run build_ivf_index first"
         )
-    gone = (
+    carry = tuple(manifest.get("carry") or ())
+    assigned = None
+    id_frames = []
+    if vectors is not None:
+        missing = [c for c in carry if c not in vectors.columns]
+        if missing:
+            raise ValueError(
+                f"index at {path} carries assign metadata {list(carry)}; "
+                f"the upsert batch is missing columns {missing}"
+            )
+        cents = read_versioned(
+            spark,
+            f"{path}/centroids",
+            "part",
+            version=manifest.get("centroid_version"),
+        ).select("bucket", "centroid")
+        base = vectors.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("embedding"),
+            *[F.col(c) for c in carry],
+        )
+        assign = (
+            knn.assign_nearest_centroid
+            if exact_assign
+            else knn.assign_nearest_centroid_np
+        )
+        assigned = (
+            assign(base.select("vec_id", "embedding"), cents)
+            .withColumnRenamed("label", "bucket")
+            .join(base, "vec_id")
+            .select("vec_id", "embedding", *carry, "bucket")
+            .localCheckpoint(eager=True)
+        )
+        id_frames.append(assigned.select("vec_id"))
+    if deleted is not None:
+        id_frames.append(deleted.select(F.col(id_col).alias("vec_id")))
+    ids = reduce(DataFrame.unionByName, id_frames)  # dupes harmless
+    # read three times (emptiness, the merge's partitions and keys)
+    old = (
         read_versioned(spark, f"{path}/assign", "bucket")
         .select("vec_id", "bucket")
-        .join(
-            F.broadcast(ids.select(F.col(id_col).alias("vec_id"))),
-            "vec_id",
-            "left_semi",
-        )
+        .join(F.broadcast(ids), "vec_id", "left_semi")
+        .localCheckpoint(eager=True)
     )
-    if gone.isEmpty():
+    if assigned is None and old.isEmpty():
         return int(manifest["version"])
-    extra = {"centroid_version": manifest.get("centroid_version")}
-    if manifest.get("built_rows") is not None:
-        extra["built_rows"] = manifest["built_rows"]
-    extra["carry"] = list(manifest.get("carry") or ())
-    return delete_versioned(
-        gone, f"{path}/assign", keys=["vec_id"],
-        partition_col="bucket", extra=extra,
+    # the paired centroid_version, built_rows (the drift-budget
+    # denominator — still the QUANTIZER's training size) and carry
+    # schema ride the merge's manifest carry-forward
+    return merge_versioned(
+        f"{path}/assign", ["vec_id"], "bucket", upserts=assigned, deletes=old
     )
 
 

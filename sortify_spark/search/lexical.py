@@ -25,15 +25,15 @@ keyword half this engine added beyond the reference:
     tables AS ONE BUILD'S SNAPSHOT (same pairing discipline as the
     IVF assign→centroid manifest, ``search/index.py:89-94``).
 
-* :func:`upsert_lexical_index` — incremental ADD / REPLACE with exact
-  df maintenance: a replaced doc's stale postings are located with one
-  column-pruned (pt, term, doc_id) scan of the postings table (the
-  same shape as IVF's moved-id scan), deleted where the new text no
-  longer contains the term, and per-term df / n_docs / sum_dl adjust
-  by exact integer deltas.  Terms whose df drops to zero are kept at
-  df = 0 rather than deleted — they have no postings so they can never
-  score, and keeping them makes the terms maintenance ONE atomic
-  commit instead of a delete + upsert pair.
+* :func:`upsert_lexical_index` / :func:`delete_from_lexical_index` —
+  incremental ADD / REPLACE / DELETE with exact df maintenance, both
+  thin entry points over ONE write body (:func:`_lexical_delta`; a
+  delete is a replace with no new text): the touched docs' old
+  postings and lengths are located with one column-pruned scan each,
+  and per-term df / n_docs / sum_dl adjust by exact integer deltas.
+  Terms whose df drops to zero are kept at df = 0 rather than deleted
+  — they have no postings so they can never score, and keeping them
+  makes the terms maintenance ONE atomic keyed commit.
 
 * :func:`probe_lexical_index` — BM25 top-k through the stored index:
   query terms hash to their posting buckets (partition-pruned via the
@@ -45,11 +45,13 @@ keyword half this engine added beyond the reference:
   driver row ``bm25_index_probe`` hash-checks against a pure-SQL
   replay.
 
-Crash consistency: commits run postings → doclen → terms(anchor).  A
-crash between them leaves the anchor pointing at the PREVIOUS paired
-snapshot — probes never observe a half-committed build; the next
-upsert's keyed merges heal the orphaned newer versions (the
-derived-artifact trade documented on ``upsert_ivf_index``).
+Crash consistency: every write — build, add, replace or delete —
+commits exactly one version per table, postings and doclen first and
+terms (the anchor) last.  A crash between them leaves the anchor pointing at the
+PREVIOUS paired snapshot — probes never observe a half-committed
+write; re-running the write for the affected ids heals the orphaned
+newer versions, because its keyed merges replace whatever those
+versions hold under the same keys.
 
 Scale shape: the build is one tokenize + one (doc, term) aggregate of
 the corpus; each probe reads |query terms| bucket partitions of the
@@ -59,6 +61,8 @@ representation itself, exactly how it is written here.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -270,120 +274,11 @@ def upsert_lexical_index(
     text_col: str = "text",
 ) -> int:
     """Incremental ADD / REPLACE against the stored index; returns the
-    committed anchor version.
-
-    New ids append; re-sent ids REPLACE their previous text: stale
-    postings (terms the new text no longer contains) are located with
-    one column-pruned scan of the postings table restricted to the
-    batch's ids and deleted, same-key rows overwrite via the keyed
-    upsert, and df / n_docs / sum_dl adjust by exact integer deltas —
+    committed anchor version.  New ids append; re-sent ids REPLACE
+    their previous text — :func:`_lexical_delta` with no deleted ids,
     so the post-upsert index is value-identical to a fresh build over
     the replaced corpus (hash-checked by ``bm25_index_probe``)."""
-    from sortify_spark.sources.versioned import (
-        delete_versioned,
-        read_manifest,
-        read_versioned,
-        upsert_versioned,
-    )
-
-    spark = docs.sparkSession
-    anchor = read_manifest(f"{path}/terms")
-    if anchor["version"] == 0:
-        raise FileNotFoundError(
-            f"no lexical index at {path} — upsert_lexical_index maintains "
-            "an EXISTING index; run build_lexical_index first"
-        )
-    pt_buckets = int(anchor["pt_buckets"])
-    pd_buckets = int(anchor.get("pd_buckets", DEFAULT_PD_BUCKETS))
-    carry = tuple(anchor.get("carry") or ())
-    missing = [c for c in carry if c not in docs.columns]
-    if missing:
-        raise ValueError(
-            f"index at {path} carries posting metadata {list(carry)}; "
-            f"the upsert batch is missing columns {missing}"
-        )
-    bpost, bdoclen = _tokenized(
-        docs, id_col, text_col, pt_buckets, pd_buckets, carry
-    )
-    bpost = bpost.localCheckpoint(eager=True)
-    bdoclen = bdoclen.localCheckpoint(eager=True)
-    ids = bdoclen.select("doc_id").distinct()
-
-    # replaced ids' old lengths (forward table) and old posting keys
-    # (column-pruned inverted scan — the IVF moved-id shape)
-    old_len = read_versioned(
-        spark, f"{path}/doclen", "pd", version=anchor.get("doclen_version")
-    ).join(F.broadcast(ids), "doc_id", "left_semi")
-    repl = old_len.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).first()
-    oldp = (
-        read_versioned(
-            spark,
-            f"{path}/postings",
-            "pt",
-            version=anchor.get("postings_version"),
-        )
-        .select("pt", "term", "doc_id")
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .localCheckpoint(eager=True)  # read twice: stale keys + df deltas
-    )
-    stale = oldp.join(
-        bpost.select("term", "doc_id"), ["term", "doc_id"], "left_anti"
-    )
-    if not stale.isEmpty():
-        delete_versioned(
-            stale,
-            f"{path}/postings",
-            keys=["term", "doc_id"],
-            partition_col="pt",
-        )
-    pv = upsert_versioned(
-        bpost, f"{path}/postings", keys=["term", "doc_id"], partition_col="pt"
-    )
-    dv = upsert_versioned(
-        bdoclen, f"{path}/doclen", keys=["doc_id"], partition_col="pd"
-    )
-
-    # exact per-term df delta = docs gained - docs lost (a replaced doc
-    # that keeps a term contributes to both sides and cancels)
-    plus = bpost.groupBy("term").agg(F.count(F.lit(1)).alias("p"))
-    minus = oldp.groupBy("term").agg(F.count(F.lit(1)).alias("m"))
-    delta = plus.join(minus, "term", "full_outer").select(
-        "term",
-        (F.coalesce("p", F.lit(0)) - F.coalesce("m", F.lit(0))).alias("d"),
-    ).filter(F.col("d") != 0)
-    old_terms = read_versioned(spark, f"{path}/terms", "part").select(
-        "term", "df"
-    )
-    changed = (
-        delta.join(old_terms, "term", "left")
-        .select(
-            "term",
-            (F.coalesce("df", F.lit(0)) + F.col("d")).cast("long").alias("df"),
-        )
-        .withColumn("part", F.lit(0))
-    )
-    batch = bdoclen.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).first()
-    return upsert_versioned(
-        changed,
-        f"{path}/terms",
-        keys=["term"],
-        partition_col="part",
-        extra={
-            "postings_version": pv,
-            "doclen_version": dv,
-            "n_docs": int(anchor["n_docs"]) + int(batch["n"]) - int(repl["n"]),
-            "sum_dl": int(anchor["sum_dl"]) + int(batch["s"]) - int(repl["s"]),
-            "pt_buckets": pt_buckets,
-            "pd_buckets": pd_buckets,
-            "carry": list(carry),
-        },
-    )
+    return _lexical_delta(path, docs=docs, id_col=id_col, text_col=text_col)
 
 
 def delete_from_lexical_index(
@@ -393,104 +288,143 @@ def delete_from_lexical_index(
 ) -> int:
     """Keyed DELETE against the stored index — the S10 contract
     (reference ``vector_db_service.py:263-323``: a deleted document is
-    unfindable) applied to the BM25 artifact (VERDICT r8 missing #1):
-    the deleted docs' postings and doclen rows are removed, per-term df
-    decrements by the exact count of postings lost, and n_docs/sum_dl
-    shrink by the deleted docs' exact contribution — so a post-delete
-    probe is value-identical to a from-scratch rebuild over the shrunk
-    corpus (hash-checked by ``bm25_index_probe``'s delete step).
+    unfindable) applied to the BM25 artifact: :func:`_lexical_delta`
+    with no new rows, so a post-delete probe is value-identical to a
+    from-scratch rebuild over the shrunk corpus (hash-checked by
+    ``bm25_index_probe``'s delete step).
 
     ``ids`` is a one-column frame of doc ids (``id_col``); ids not in
-    the index are ignored (idempotent — re-running a delete is a
-    no-op commit).  Returns the committed anchor version.  Terms whose
-    df reaches 0 stay at df = 0 with no postings (the upsert path's
-    contract) so the terms maintenance is one atomic keyed commit.
+    the index are ignored (idempotent — re-running a delete commits
+    nothing and returns the current anchor version)."""
+    return _lexical_delta(path, deleted=ids, id_col=id_col)
 
-    Scale shape: ONE column-pruned (pt, term, doc_id) scan of the
-    postings table semi-joined with the broadcast delete list locates
-    every row to remove (the IVF moved-id shape); only the touched
-    pt/pd partitions rewrite; everything downstream is sized by the
-    DELETED docs' postings, never the corpus."""
+
+def _lexical_delta(
+    path: str,
+    docs: DataFrame | None = None,
+    deleted: DataFrame | None = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> int:
+    """The ONE incremental write body of the lexical artifact: every id
+    in ``docs`` or ``deleted`` loses its indexed rows, and ``docs``
+    brings their new rows (a delete is a replace with no new text).
+    Returns the committed anchor version — the current one, with no
+    commit, when nothing is indexed under ``deleted`` and ``docs`` is
+    None.
+
+    The touched ids' old doclen rows and old (pt, term, doc_id) posting
+    keys are located ONCE (column-pruned scans of the anchor-paired
+    snapshots, semi-joined with the broadcast id list — the IVF
+    delta's shape).  From them and the batch's own rows derive, once:
+    the stale postings and doclen keys, the exact per-term df deltas
+    (docs gained − docs lost; a replaced doc that keeps a term cancels)
+    and the n_docs / sum_dl deltas.  Each table then commits as one
+    keyed merge, postings → doclen → terms (the anchor), so a replace
+    that drops terms is one postings version, not a delete plus an
+    upsert.  Terms whose df drops to zero stay at df = 0 rather than
+    being deleted — they have no postings so they can never score, and
+    keeping them makes the terms commit one keyed upsert.
+
+    Scale shape: everything downstream of the two scans is sized by
+    the touched docs' postings, never the corpus; only the touched
+    pt/pd partitions rewrite."""
     from sortify_spark.sources.versioned import (
-        delete_versioned,
+        merge_versioned,
         read_manifest,
         read_versioned,
-        upsert_versioned,
     )
 
-    spark = ids.sparkSession
+    spark = (docs if docs is not None else deleted).sparkSession
     anchor = read_manifest(f"{path}/terms")
     if anchor["version"] == 0:
         raise FileNotFoundError(
-            f"no lexical index at {path} — delete_from_lexical_index "
-            "maintains an EXISTING index; run build_lexical_index first"
+            f"no lexical index at {path} — incremental writes maintain "
+            "an EXISTING index; run build_lexical_index first"
         )
     pt_buckets = int(anchor["pt_buckets"])
     pd_buckets = int(anchor.get("pd_buckets", DEFAULT_PD_BUCKETS))
-    ids = ids.select(F.col(id_col).alias("doc_id")).distinct()
+    carry = tuple(anchor.get("carry") or ())
+    bpost = bdoclen = None
+    id_frames = []
+    if docs is not None:
+        missing = [c for c in carry if c not in docs.columns]
+        if missing:
+            raise ValueError(
+                f"index at {path} carries posting metadata {list(carry)}; "
+                f"the upsert batch is missing columns {missing}"
+            )
+        bpost, bdoclen = _tokenized(
+            docs, id_col, text_col, pt_buckets, pd_buckets, carry
+        )
+        bpost = bpost.localCheckpoint(eager=True)
+        bdoclen = bdoclen.localCheckpoint(eager=True)
+        id_frames.append(bdoclen.select("doc_id"))
+    if deleted is not None:
+        id_frames.append(deleted.select(F.col(id_col).alias("doc_id")))
+    # duplicate ids are harmless on the build side of a semi-join
+    ids = F.broadcast(reduce(DataFrame.unionByName, id_frames))
 
-    # the deleted docs' forward rows: exact n_docs/sum_dl deltas + the
-    # doclen partitions to rewrite (read twice → one materialization)
-    old_len = (
-        read_versioned(
-            spark, f"{path}/doclen", "pd", version=anchor.get("doclen_version")
+    def indexed(table: str, pcol: str, *cols: str) -> DataFrame:
+        """The touched ids' rows of one anchor-paired table — read
+        twice (the deltas + the merge's keys), so materialized once."""
+        return (
+            read_versioned(
+                spark, f"{path}/{table}", pcol,
+                version=anchor.get(f"{table}_version"),
+            )
+            .select(*cols)
+            .join(ids, "doc_id", "left_semi")
+            .localCheckpoint(eager=True)
         )
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    gone = old_len.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
+
+    old_len = indexed("doclen", "pd", "pd", "doc_id", "dl")
+    oldp = indexed("postings", "pt", "pt", "term", "doc_id")
+    # signed rows: -1 per old doc / posting lost, +1 per new one gained
+    lens = old_len.select(F.lit(-1).alias("sgn"), "dl")
+    occ = oldp.select("term", F.lit(-1).alias("d"))
+    if bdoclen is not None:
+        lens = lens.unionByName(bdoclen.select(F.lit(1).alias("sgn"), "dl"))
+        occ = occ.unionByName(bpost.select("term", F.lit(1).alias("d")))
+    stats = lens.agg(
+        F.coalesce(F.sum("sgn"), F.lit(0)).alias("n"),
+        F.coalesce(F.sum(F.col("sgn") * F.col("dl")), F.lit(0)).alias("s"),
     ).first()
-    if int(gone["n"]) == 0:
+    if docs is None and int(stats["n"]) == 0:
         return int(anchor["version"])  # nothing indexed under these ids
-    oldp = (
-        read_versioned(
-            spark,
-            f"{path}/postings",
-            "pt",
-            version=anchor.get("postings_version"),
-        )
-        .select("pt", "term", "doc_id")
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .localCheckpoint(eager=True)  # read twice: delete keys + df deltas
+    pv = merge_versioned(
+        f"{path}/postings", ["term", "doc_id"], "pt",
+        upserts=bpost, deletes=oldp,
     )
-    pv = anchor.get("postings_version")
-    if not oldp.isEmpty():  # all-empty-text docs have no postings
-        pv = delete_versioned(
-            oldp, f"{path}/postings", keys=["term", "doc_id"],
-            partition_col="pt",
-        )
-    dv = delete_versioned(
-        old_len.select("pd", "doc_id"), f"{path}/doclen", keys=["doc_id"],
-        partition_col="pd",
+    dv = merge_versioned(
+        f"{path}/doclen", ["doc_id"], "pd",
+        upserts=bdoclen, deletes=old_len,
     )
     old_terms = read_versioned(spark, f"{path}/terms", "part").select(
         "term", "df"
     )
     changed = (
-        oldp.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("m"))
+        occ.groupBy("term")
+        .agg(F.sum("d").alias("d"))
+        .filter(F.col("d") != 0)
         .join(old_terms, "term", "left")
         .select(
             "term",
-            (F.coalesce("df", F.lit(0)) - F.col("m")).cast("long").alias("df"),
+            (F.coalesce("df", F.lit(0)) + F.col("d")).cast("long").alias("df"),
         )
         .withColumn("part", F.lit(0))
     )
-    return upsert_versioned(
-        changed,
+    return merge_versioned(
         f"{path}/terms",
-        keys=["term"],
-        partition_col="part",
+        ["term"],
+        "part",
+        upserts=changed,
+        # pt/pd fan-outs and the carry schema ride the carry-forward
         extra={
             "postings_version": pv,
             "doclen_version": dv,
-            "n_docs": int(anchor["n_docs"]) - int(gone["n"]),
-            "sum_dl": int(anchor["sum_dl"]) - int(gone["s"]),
-            "pt_buckets": pt_buckets,
-            "pd_buckets": pd_buckets,
-            "carry": list(anchor.get("carry") or ()),
+            "n_docs": int(anchor["n_docs"]) + int(stats["n"]),
+            "sum_dl": int(anchor["sum_dl"]) + int(stats["s"]),
         },
     )
 

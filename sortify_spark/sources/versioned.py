@@ -59,6 +59,7 @@ import tempfile
 import time
 from collections.abc import Sequence
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -211,7 +212,7 @@ def _read_partition_dirs(
     with EVOLVED schemas (columns added by later upserts), and the
     merged read surfaces the union schema with nulls for files that
     predate a column — the schema-on-read half of schema evolution
-    (write-side alignment happens in ``upsert_versioned``).  Cost is
+    (write-side alignment happens in ``merge_versioned``).  Cost is
     one footer read per file at planning, standard for evolving
     parquet tables.
 
@@ -327,27 +328,57 @@ def upsert_versioned(
     extra: dict | None = None,
 ) -> int:
     """Keyed upsert as an atomic new version; returns the committed
+    version number — :func:`merge_versioned` with no deletes."""
+    return merge_versioned(
+        path, keys, partition_col, upserts=updates,
+        write_files_per_partition=write_files_per_partition, extra=extra,
+    )
+
+
+def merge_versioned(
+    path: str,
+    keys: Sequence[str],
+    partition_col: str,
+    upserts: DataFrame | None = None,
+    deletes: DataFrame | None = None,
+    write_files_per_partition: int = 1,
+    extra: dict | None = None,
+) -> int:
+    """Keyed MERGE as ONE atomic new version — the single write body
+    behind :func:`upsert_versioned` and :func:`delete_versioned`; a
+    delete is an upsert that brings no new rows.  Returns the committed
     version number.  ``extra`` merges additional metadata keys into the
     committed manifest (same contract as ``overwrite_versioned``).
 
-    Affected partitions = the update's distinct partition values; their
-    current rows load from the manifest's dirs, matched keys are
-    replaced (broadcast anti-join — the existing data never shuffles),
-    and the merged partitions write into ``v=N``.  Untouched partitions
-    are neither read nor written — the new manifest simply keeps
-    pointing at their old dirs.  Readers switch snapshots at the
-    manifest swap, atomically across ALL partitions."""
-    spark = updates.sparkSession
+    ``upserts`` rows insert or replace; ``deletes`` (the partition
+    column plus ``keys``) name rows to remove.  Affected partitions =
+    the distinct partition values of both; their current rows load from
+    the manifest's dirs in ONE scan, every key of either frame drops via
+    one broadcast anti-join on (partition, keys) — the existing data
+    never shuffles — and survivors plus upserts write into ``v=N``.  A
+    partition left with no rows writes no dir and drops out of the
+    manifest.  Untouched partitions are neither read nor written — the
+    new manifest simply keeps pointing at their old dirs.  Readers
+    switch snapshots at the manifest swap, atomically across ALL
+    partitions."""
+    frames = [df for df in (upserts, deletes) if df is not None]
+    spark = frames[0].sparkSession
     manifest = read_manifest(path)
     new_version = manifest["version"] + 1
+    dtype = frames[0].schema[partition_col].dataType.simpleString()
+    if upserts is None:
+        dtype = manifest.get("partition_dtype", dtype)
+    anti_keys = list(dict.fromkeys([partition_col, *keys]))
+    touched = reduce(
+        DataFrame.unionByName, [df.select(*anti_keys) for df in frames]
+    )
     # Reserve BEFORE the data write: a losing concurrent writer must
     # fail while it still owns zero files, or its overwrite of the
     # shared v=N dir would corrupt the winner's committed data.
     with _reserved(path, new_version):
-        dtype = updates.schema[partition_col].dataType.simpleString()
         affected = [
             str(r[0])
-            for r in updates.select(
+            for r in touched.select(
                 F.col(partition_col).cast("string")
             ).distinct().collect()
         ]
@@ -356,92 +387,78 @@ def upsert_versioned(
             for v in affected
             if v in manifest["partitions"]
         ]
-        merged = updates
+        merged = upserts
         if existing_rels:
-            # ONE scan over all affected partitions' current dirs;
-            # matched keys drop via a broadcast anti-join on
-            # (partition, keys) — the existing data never shuffles,
-            # whatever the partition count.
-            existing = _read_partition_dirs(
+            keep = _read_partition_dirs(
                 spark, path, partition_col, existing_rels, dtype=dtype
-            )
-            anti_keys = list(dict.fromkeys([partition_col, *keys]))
-            keep = existing.join(
-                F.broadcast(updates.select(*anti_keys).distinct()),
-                anti_keys,
-                "left_anti",
-            )
+            ).join(F.broadcast(touched), anti_keys, "left_anti")
             # Schema evolution: align both sides to the UNION of their
             # columns — an update may add columns (existing rows get
             # nulls) or omit columns (its rows get nulls); reads merge
             # schemas across version dirs, so older untouched
             # partitions keep their written files untouched and
             # surface nulls for new columns.
-            merged = keep.unionByName(updates, allowMissingColumns=True)
-        vdir = os.path.join(path, f"v={new_version}")
-        # Repartition BY THE PARTITION VALUE before the partitionBy
-        # write: without it every upstream task fans out one file into
-        # every affected partition dir (32 shuffle partitions × 64 dirs
-        # = 2048 tiny files per commit) and each commit + every
-        # subsequent snapshot read pays per-file overhead — measured as
-        # the dominant cost of streaming admission commits.  With it,
-        # exactly ``write_files_per_partition`` files per affected
-        # partition per version: the default 1 serializes a giant
-        # partition into one task, so raise it to restore write
-        # parallelism (a deterministic key-hash salt — the
-        # export_training_shards decoupling — splits each partition
-        # across that many tasks/files).
+            merged = (
+                keep
+                if merged is None
+                else keep.unionByName(merged, allowMissingColumns=True)
+            )
         lay_col = manifest.get("layout_col")
-        roll = None
         intent_roll = None
-        if lay_col is not None:
-            # a build-time secondary layout (overwrite_versioned
-            # ``layout_col``) survives every keyed upsert: the touched
-            # partitions rewrite sorted + count-rolled at the
-            # manifest-PINNED roll (no recount — stable shape, single
-            # execution of the merged plan)
-            merged, roll, intent_roll = _apply_layout(
-                merged, partition_col, lay_col,
-                manifest.get("layout_files"),
-                roll=manifest.get("layout_roll"),
-                # legacy tables (no pinned roll) re-derive here — the
-                # recorded crossover floor keeps that derivation from
-                # pinning sub-row-group files (ADVICE r12)
-                min_file_rows=manifest.get("layout_floor"),
-            )
-        elif write_files_per_partition > 1:
-            salt = F.pmod(
-                F.abs(F.hash(*[F.col(k) for k in keys])),
-                F.lit(write_files_per_partition),
-            )
-            # explicit numPartitions: AQE would otherwise coalesce the
-            # salted shuffle back into few tasks, collapsing the salt
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            merged = merged.repartition(
-                max(n_part, write_files_per_partition),
-                F.col(partition_col),
-                salt,
-            )
-        else:
-            merged = merged.repartition(F.col(partition_col))
-        _write_partition_dirs(merged, roll, vdir, partition_col)
+        written: set[str] = set()
+        if merged is not None and affected:
+            vdir = os.path.join(path, f"v={new_version}")
+            if lay_col is None and write_files_per_partition > 1:
+                # A giant unlayouted partition serialized into one
+                # task: a deterministic key-hash salt (the
+                # export_training_shards decoupling) splits it across
+                # that many tasks/files.  Explicit numPartitions: AQE
+                # would otherwise coalesce the salted shuffle back
+                # into few tasks, collapsing the salt.
+                salt = F.pmod(
+                    F.abs(F.hash(*[F.col(k) for k in keys])),
+                    F.lit(write_files_per_partition),
+                )
+                n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+                shaped = merged.repartition(
+                    max(n_part, write_files_per_partition),
+                    F.col(partition_col),
+                    salt,
+                )
+                roll = None
+            else:
+                # Repartition BY THE PARTITION VALUE before the
+                # partitionBy write (one file per affected partition,
+                # not one per upstream task per dir).  A build-time
+                # secondary layout (overwrite_versioned ``layout_col``)
+                # survives every merge: touched partitions rewrite
+                # sorted + count-rolled at the manifest-PINNED roll;
+                # legacy tables (no pinned roll) re-derive it, floored
+                # at the recorded crossover floor (ADVICE r12).
+                shaped, roll, intent_roll = _apply_layout(
+                    merged, partition_col, lay_col,
+                    manifest.get("layout_files"),
+                    roll=manifest.get("layout_roll"),
+                    min_file_rows=manifest.get("layout_floor"),
+                )
+            _write_partition_dirs(shaped, roll, vdir, partition_col)
+            written = _written_values(vdir, partition_col)
         new_parts = dict(manifest["partitions"])
         for value in affected:
-            new_parts[value] = f"v={new_version}/{partition_col}={value}"
-        new_manifest = {
-            "version": new_version,
-            "partitions": new_parts,
-            "partition_dtype": dtype,
-        }
-        for lk in ("layout_col", "layout_files", "layout_roll",
-                   "layout_floor"):
-            if lk in manifest:
-                new_manifest[lk] = manifest[lk]
-        if lay_col is not None and "layout_roll" not in manifest:
+            if value in written:
+                new_parts[value] = f"v={new_version}/{partition_col}={value}"
+            else:
+                new_parts.pop(value, None)
+        # every manifest key beyond the partition map (layout pins,
+        # anchor extras like paired versions or carry schemas) carries
+        # forward — the compact/fold contract; ``extra`` overrides
+        new_manifest = _carried(manifest, new_version, new_parts)
+        new_manifest["partition_dtype"] = dtype
+        if intent_roll is not None and "layout_roll" not in manifest:
             # legacy layout table (written before the roll was
             # recorded): persist THIS rewrite's computed roll so every
-            # later upsert/delete/compact shares one pinned intent —
-            # without it, upsert (affected-partitions max) and compact
+            # later merge/compact shares one pinned intent — without
+            # it, a merge (affected-partitions max) and compact
             # (all-partitions footer max) derive different rolls and a
             # maintain cycle can oscillate forever (r11 advice)
             new_manifest["layout_roll"] = int(intent_roll)
@@ -692,13 +709,7 @@ def overwrite_versioned(
             min_file_rows=layout_min_file_rows,
         )
         _write_partition_dirs(shaped, write_roll, vdir, partition_col)
-        from urllib.parse import unquote
-
-        written = {
-            unquote(entry.split("=", 1)[1])
-            for entry in os.listdir(vdir)
-            if entry.startswith(f"{partition_col}=")
-        }
+        written = _written_values(vdir, partition_col)
         new_manifest = {
             "version": new_version,
             "partitions": {
@@ -734,90 +745,42 @@ def delete_versioned(
     extra: dict | None = None,
 ) -> int:
     """Keyed delete as an atomic new version (the S10 vector-delete
-    semantics on the versioned store): affected partitions rewrite
-    WITHOUT the matched keys via the same broadcast anti-join as
-    ``upsert_versioned``; a partition emptied by the delete drops out
-    of the manifest.  Untouched partitions are never read."""
-    spark = deletes.sparkSession
-    manifest = read_manifest(path)
-    new_version = manifest["version"] + 1
-    with _reserved(path, new_version):  # before any data write
-        affected = [
-            str(r[0])
-            for r in deletes.select(
-                F.col(partition_col).cast("string")
-            ).distinct().collect()
-            if str(r[0]) in manifest["partitions"]
-        ]
-        new_parts = dict(manifest["partitions"])
-        if affected:
-            # ONE scan of the affected dirs; survivors write in one
-            # job.  A partition the delete fully empties produces no
-            # output dir — detected from the written version dir and
-            # dropped from the manifest.
-            existing = _read_partition_dirs(
-                spark,
-                path,
-                partition_col,
-                [manifest["partitions"][v] for v in affected],
-                dtype=deletes.schema[partition_col].dataType.simpleString(),
-            )
-            anti_keys = list(dict.fromkeys([partition_col, *keys]))
-            keep = existing.join(
-                F.broadcast(deletes.select(*anti_keys).distinct()),
-                anti_keys,
-                "left_anti",
-            )
-            vdir = os.path.join(path, f"v={new_version}")
-            shaped, roll, intent_roll = _apply_layout(
-                keep,
-                partition_col,
-                manifest.get("layout_col"),
-                manifest.get("layout_files"),
-                roll=manifest.get("layout_roll"),
-                # legacy tables re-derive here (no pinned roll): keep
-                # the derivation floored, same as upsert_versioned
-                min_file_rows=manifest.get("layout_floor"),
-            )
-            _write_partition_dirs(shaped, roll, vdir, partition_col)
-            from urllib.parse import unquote
+    semantics on the versioned store) — :func:`merge_versioned` with
+    no upserts: affected partitions rewrite WITHOUT the matched keys; a
+    partition emptied by the delete drops out of the manifest."""
+    return merge_versioned(
+        path, keys, partition_col, deletes=deletes, extra=extra
+    )
 
-            written = {
-                unquote(entry.split("=", 1)[1])
-                for entry in os.listdir(vdir)
-                if entry.startswith(f"{partition_col}=")
-            }
-            for value in affected:
-                if value in written:
-                    new_parts[value] = (
-                        f"v={new_version}/{partition_col}={value}"
-                    )
-                else:
-                    del new_parts[value]
-        new_manifest = {
-            "version": new_version,
-            "partitions": new_parts,
-            "partition_dtype": manifest.get(
-                "partition_dtype",
-                deletes.schema[partition_col].dataType.simpleString(),
-            ),
-        }
-        for lk in ("layout_col", "layout_files", "layout_roll",
-                   "layout_floor"):
-            if lk in manifest:
-                new_manifest[lk] = manifest[lk]
-        if (
-            affected
-            and manifest.get("layout_col") is not None
-            and "layout_roll" not in manifest
-        ):
-            # legacy layout table: pin this rewrite's computed roll
-            # (same reasoning as upsert_versioned)
-            new_manifest["layout_roll"] = int(intent_roll)
-        if extra:
-            new_manifest.update(extra)
-        _commit_manifest(path, new_manifest)
-    return new_version
+
+def _carried(manifest: dict, version: int, partitions: dict) -> dict:
+    """The next commit's manifest: every key of ``manifest`` beyond the
+    partition map carries forward verbatim, under a new ``version`` and
+    partition map.  ``committed_at`` is structural, not carried: each
+    commit stamps a fresh timestamp so ``resolve_version_at`` stays
+    monotonic and an as-of read taken before a commit never resolves to
+    the snapshot after it."""
+    out = {
+        k: v
+        for k, v in manifest.items()
+        if k not in ("version", "partitions", "committed_at")
+    }
+    out.update(version=version, partitions=partitions)
+    return out
+
+
+def _written_values(vdir: str, partition_col: str) -> set[str]:
+    """Partition values a ``partitionBy`` write actually produced under
+    ``vdir`` (a value whose rows were all filtered out writes no dir)."""
+    from urllib.parse import unquote
+
+    if not os.path.isdir(vdir):
+        return set()
+    return {
+        unquote(entry.split("=", 1)[1])
+        for entry in os.listdir(vdir)
+        if entry.startswith(f"{partition_col}=")
+    }
 
 
 def _partition_row_counts(
@@ -1022,21 +985,9 @@ def compact(
         new_parts = dict(manifest["partitions"])
         for value, _ in todo:
             new_parts[value] = f"v={new_version}/{partition_col}={value}"
-        # layout-only commit: every manifest key beyond the partition
-        # map (anchor extras like n_docs / carry / paired versions)
-        # carries forward verbatim — compaction must never change what
-        # a reader of the manifest sees.  committed_at is structural,
-        # not carried: each commit stamps a fresh timestamp so
-        # resolve_version_at stays monotonic and an as-of read taken
-        # before the compaction never resolves to the post-compaction
-        # snapshot.
-        new_manifest = {
-            k: v
-            for k, v in manifest.items()
-            if k not in ("version", "partitions", "committed_at")
-        }
-        new_manifest["version"] = new_version
-        new_manifest["partitions"] = new_parts
+        # layout-only commit: compaction must never change what a
+        # reader of the manifest sees beyond the partition map
+        new_manifest = _carried(manifest, new_version, new_parts)
         if lay_col is not None and intent is not None:
             # persist the roll this pass flagged AND rewrote with:
             # pins legacy tables on their first compaction and records
@@ -1123,17 +1074,10 @@ def fold_partitions(
             v: rel for v, rel in parts.items() if v not in fold_vals
         }
         new_parts[base_str] = f"v={new_version}/{partition_col}={base_str}"
-        # layout-only commit — carry every non-structural manifest key
-        # forward, same contract as compact() (committed_at excluded:
-        # the fold re-keys the partition column, so an as-of read taken
+        # layout-only commit — same carry contract as compact() (the
+        # fold re-keys the partition column, so an as-of read taken
         # before the fold MUST NOT resolve to the folded snapshot)
-        new_manifest = {
-            k: v
-            for k, v in manifest.items()
-            if k not in ("version", "partitions", "committed_at")
-        }
-        new_manifest["version"] = new_version
-        new_manifest["partitions"] = new_parts
+        new_manifest = _carried(manifest, new_version, new_parts)
         _commit_manifest(path, new_manifest)
     return new_version
 

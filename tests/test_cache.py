@@ -86,3 +86,23 @@ def test_facade_cached_search(spark):
     eng.cached_search("other text", search_type="traditional")
     assert eng.result_cache.stats().miss_count == 3
     assert a.collect() == b.collect()
+
+
+def test_cached_search_forgets_deleted_document(spark, tmp_path):
+    """Writes invalidate the result cache: after delete_vectors, a
+    repeat cached_search must not serve the deleted document from the
+    entry cached before the delete (its TTL has not expired)."""
+    from sortify_spark.facade import SortifyEngine
+    from tests.conftest import SF_DIR
+
+    eng = SortifyEngine(
+        spark, SF_DIR, dim=16, embed="expr", doc_limit=60,
+        index_root=str(tmp_path),
+    )
+    text = eng.documents.orderBy("doc_id").first()["text"]
+    before = eng.cached_search(text, search_type="summary_only").collect()
+    victim = before[0]["id"]
+    eng.delete_vectors([victim])
+    after = eng.cached_search(text, search_type="summary_only").collect()
+    assert after
+    assert victim not in {r["id"] for r in after}

@@ -1916,6 +1916,48 @@ def test_lexical_pd_buckets_recorded_and_honored(spark, tmp_path):
         .filter(F.col("count") > 1)
     )
     assert dupes.isEmpty()
+    # a replace that DROPS terms: stale postings leave in the same
+    # postings commit that writes the new ones — one version per table
+    pm, dm = (
+        read_manifest(f"{path}/{t}")["version"] for t in ("postings", "doclen")
+    )
+    short = docs.filter(F.col("doc_id") < 5).withColumn(
+        "text", F.lit("replaced tail")
+    )
+    upsert_lexical_index(short, path)
+    a3 = read_manifest(f"{path}/terms")
+    assert a3["postings_version"] == pm + 1
+    assert read_manifest(f"{path}/postings")["version"] == pm + 1
+    assert a3["doclen_version"] == dm + 1
+    assert read_manifest(f"{path}/terms")["version"] == a2["version"] + 1
+    left = {
+        r["term"]
+        for r in read_versioned(
+            spark, f"{path}/postings", "pt", version=a3["postings_version"]
+        )
+        .filter(F.col("doc_id") < 5)
+        .select("term")
+        .collect()
+    }
+    assert left == {"replaced", "tail"}
+    # value-identical to a fresh build over the replaced corpus
+    ref = str(tmp_path / "ref")
+    build_lexical_index(
+        docs.filter(F.col("doc_id") >= 5).unionByName(short), ref,
+        pd_buckets=4,
+    )
+    r1 = read_manifest(f"{ref}/terms")
+    assert (a3["n_docs"], a3["sum_dl"]) == (r1["n_docs"], r1["sum_dl"])
+
+    def vocab(p):
+        return {
+            (r["term"], r["df"])
+            for r in read_versioned(spark, f"{p}/terms", "part")
+            .filter(F.col("df") > 0)
+            .collect()
+        }
+
+    assert vocab(path) == vocab(ref)
 
 
 @pytest.mark.slow
@@ -3027,6 +3069,102 @@ def test_facade_mutation_storage_clean(spark, tmp_path):
         _time.sleep(0.5)
         gc.collect()
     assert not leaked, f"storage blocks leaked past release(): {leaked}"
+
+
+def test_facade_write_plan_stays_flat(spark, tmp_path):
+    """Every write materializes the served frames, so the next write's
+    plan never embeds the previous one: after 5 add/delete cycles the
+    served vectors plan is no longer than after the first (a persisted
+    frame built on the previous persisted frame grew its plan string
+    ~4x per add/delete cycle)."""
+    from sortify_spark.facade import SortifyEngine
+
+    eng = SortifyEngine(
+        spark, SF_DIR, dim=16, embed="expr", doc_limit=60,
+        index_root=str(tmp_path),
+    )
+    lens = []
+    for i in range(5):
+        eng.add_documents(
+            spark.createDataFrame(
+                [(930_000 + i, f"plan growth cycle {i} data pipeline",
+                  "en", "upload", 40)],
+                "doc_id long, text string, lang string, source string, "
+                "n_chars long",
+            )
+        )
+        eng.delete_vectors([str(930_000 + i)])
+        lens.append(len(eng.vectors._jdf.queryExecution().toString()))
+    assert lens[-1] <= lens[0], lens
+    assert eng.vectors.filter(
+        F.col("document_id").startswith("93000")
+    ).isEmpty()
+
+
+def test_facade_readd_replaces_document(spark, tmp_path):
+    """Re-adding an existing doc_id REPLACES it everywhere: one
+    documents row, its served vectors are exactly the new text's (no
+    orphan chunk vector_id), the chunk IVF artifact holds exactly the
+    new vector ids after ONE assign commit, and the lexical scan and
+    index paths agree on a query over the new text."""
+    from sortify_spark.facade import SearchConfig, SortifyEngine
+    from sortify_spark.pipelines import ingest_vectorize_expr
+    from sortify_spark.sources.versioned import (
+        read_manifest,
+        read_versioned,
+    )
+
+    eng = SortifyEngine(
+        spark, SF_DIR, dim=16, embed="expr", doc_limit=60,
+        index_root=str(tmp_path),
+    )
+    eng.semantic_search("data pipeline", "keyword")  # builds lexical
+    ivf = eng._ivf_index("chunk")
+    v_ivf = read_manifest(f"{ivf}/assign")["version"]
+    chunks = eng.vectors.filter(F.col("vtype") == "chunk")
+    victim = (
+        chunks.groupBy("document_id").count()
+        .orderBy(F.desc("count"), "document_id").first()
+    )
+    assert victim["count"] > 1  # the replacement drops chunk vectors
+    doc_id = int(victim["document_id"])
+    old = eng.documents.filter(F.col("doc_id") == doc_id)
+    new = old.withColumn("text", F.lit("zanzibar quokka melange"))
+    eng.add_documents(new)
+    assert eng.documents.filter(F.col("doc_id") == doc_id).count() == 1
+    want = {
+        r["vector_id"]
+        for r in ingest_vectorize_expr(
+            new, chunk_size=128, overlap=32, dim=16
+        ).collect()
+    }
+    served = {
+        r["vector_id"]
+        for r in eng.vectors.filter(
+            F.col("document_id") == str(doc_id)
+        ).collect()
+    }
+    assert served == want
+    assert read_manifest(f"{ivf}/assign")["version"] == v_ivf + 1
+    indexed = {
+        r["vec_id"]
+        for r in read_versioned(spark, f"{ivf}/assign", "bucket")
+        .filter(F.col("vec_id").startswith(f"{doc_id}#"))
+        .collect()
+    }
+    assert indexed == {v for v in want if "#chunk#" in v}
+    q = "zanzibar quokka melange"
+    idx = {
+        (r["id"], r["score"])
+        for r in eng.semantic_search(q, "keyword").collect()
+    }
+    scan = {
+        (r["id"], r["score"])
+        for r in eng.semantic_search(
+            q, "keyword", SearchConfig(lexical="scan")
+        ).collect()
+    }
+    assert idx == scan and str(doc_id) in {i for i, _ in idx}
 
 
 @pytest.mark.slow

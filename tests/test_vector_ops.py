@@ -351,8 +351,9 @@ def test_ivf_index_incremental_upsert(spark, tmp_path):
     """FAISS-add semantics: upsert_ivf_index assigns new vectors to the
     STORED centroids (quantizer unchanged — centroid table version
     still the build's), replaces an existing id that moved buckets
-    without duplicating it, and a probe over the upserted index finds
-    the new vectors.  The pinned pre-upsert snapshot is unchanged."""
+    without duplicating it — in ONE assign commit — and a probe over
+    the upserted index finds the new vectors.  The pinned pre-upsert
+    snapshot is unchanged."""
     import pyspark.sql.functions as F
 
     from sortify_spark.search.index import (
@@ -372,16 +373,28 @@ def test_ivf_index_incremental_upsert(spark, tmp_path):
     path = str(tmp_path / "ivf")
     m1 = read_manifest(f"{path}/assign")
     assert m1["centroid_version"] == 1 and m1["built_rows"] > 0
-    pre = {
-        r["vec_id"]
+    pre_bucket = {
+        r["vec_id"]: r["bucket"]
         for r in read_versioned(spark, f"{path}/assign", "bucket")
-        .select("vec_id")
+        .select("vec_id", "bucket")
         .collect()
     }
-    # add the held-out slice + REPLACE one existing id with another
-    # existing vector's embedding (likely moving its bucket)
+    pre = set(pre_bucket)
+    # add the held-out slice + REPLACE one existing id with a held-out
+    # vector's embedding, choosing a victim the stored quantizer MOVES
+    # to another bucket
     donor = emb.filter(F.col("vec_id") % 5 == 1).limit(1).collect()[0]
-    victim_id = sorted(pre)[0]
+    cents = read_versioned(
+        spark, f"{path}/centroids", "part", version=m1["centroid_version"]
+    ).select("bucket", "centroid")
+    donor_bucket = knn.assign_nearest_centroid_np(
+        spark.createDataFrame(
+            [(-1, [float(x) for x in donor["embedding"]])],
+            "vec_id long, embedding array<double>",
+        ),
+        cents,
+    ).first()["label"]
+    victim_id = min(v for v, b in pre_bucket.items() if b != donor_bucket)
     adds = emb.filter(F.col("vec_id") % 5 == 1).select(
         "vec_id", "embedding"
     ).unionByName(
@@ -391,7 +404,9 @@ def test_ivf_index_incremental_upsert(spark, tmp_path):
         )
     )
     v2 = upsert_ivf_index(adds, path)
-    assert v2 > v1
+    # the move leaves the old bucket in the same commit that adds it
+    # to the new one: exactly one new assign version
+    assert v2 == v1 + 1
     m2 = read_manifest(f"{path}/assign")
     # quantizer pairing survives the upsert commits
     assert m2["centroid_version"] == 1
@@ -410,7 +425,8 @@ def test_ivf_index_incremental_upsert(spark, tmp_path):
         r["vec_id"]: r["bucket"]
         for r in cur.select("vec_id", "bucket").collect()
     }
-    assert vb[victim_id] == vb[donor["vec_id"]]
+    assert vb[victim_id] == vb[donor["vec_id"]] == donor_bucket
+    assert pre_bucket[victim_id] != vb[victim_id]  # the victim moved
     # probing with the donor embedding must surface both ids
     query = spark.createDataFrame(
         [(donor["embedding"],)], "embedding array<float>"
